@@ -12,10 +12,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * reader API is the same.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // `events.ts` arrives in whatever physical type the generator chose
@@ -67,8 +63,27 @@ object Tables {
      // partitions, so large shuffles keep their parallelism — this is
      // what makes the 512 bound scale-adaptive in BOTH directions.
      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-
-  /** Register every table as a temp view (for spark.sql / tests). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+     // Generated-class cache: Spark keeps Janino-compiled classes in one
+     // JVM-wide LRU of 100 entries by default, but one incremental ingest
+     // batch (IncrementalDedup + PostingsIndex + BM25 multiQuery + both
+     // compactions) touches ~150–220 distinct classes, so the LRU
+     // thrashed and every batch recompiled most of them — a fixed
+     // per-batch cost instead of cost that follows the batch. Measured
+     // on CodegenReuseSpec's four batches, compilations per batch: 153,
+     // 191, 206, 204 at the default; 150, 44, 17, 0 here. A warm
+     // dd_incremental run (tools/ProfileQuery) compiled 176 classes
+     // (3.0 s of Janino) at the default, none here. 4096 is well above
+     // those working sets, and the cache stays a bounded LRU. The conf
+     // is STATIC and the cache is sized once per JVM, from the active
+     // session's conf, when codegen first runs — hence here, on the one
+     // builder every graft session goes through.
+     .config("spark.sql.codegen.cache.maxEntries", "4096")
+     // ... and a cached class is only reused when the regenerated source
+     // is identical. With the default useIdInClassName=true the class
+     // name carries the whole-stage codegen id, which AQE assigns in
+     // stage-completion order — a timing race — so the same pipeline
+     // came back as a "new" class under another id (0–10 extra
+     // compiles on the same warm ingest batch, differing run to run). The
+     // id stays in the source as a comment and in the plan's `*(n)` marks.
+     .config("spark.sql.codegen.useIdInClassName", "false")
 }

@@ -39,11 +39,24 @@ case class HillFormulaExpr(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "hill_formula"
 
+  /** A null symbol element makes the formula null (see `compute`), so a
+    * non-null array can still yield null. */
+  override def nullable: Boolean = child.nullable || (child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  })
+
   override protected def nullSafeEval(input: Any): Any =
     HillFormulaExpr.compute(input.asInstanceOf[ArrayData])
 
+  // The null flag must follow compute's result, not only the child's:
+  // `defineCodeGen` flagged a null formula (null element) as non-null, and
+  // UnsafeRowWriter would then dereference it.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HillFormulaExpr.compute($c)")
+    nullSafeCodeGen(ctx, ev, c => {
+      val set = s"${ev.value} = graft.functions.HillFormulaExpr.compute($c);"
+      if (nullable) s"$set\n${ev.isNull} = ${ev.value} == null;" else set
+    })
 
   override protected def withNewChildInternal(newChild: Expression): HillFormulaExpr =
     copy(child = newChild)

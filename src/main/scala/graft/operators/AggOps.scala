@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 
 /** Aggregation operators from SURVEY §2.4/2.5.
   *
@@ -14,11 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * which breaks both oracle comparison and downstream equality joins.
   */
 object AggOps {
-
-  /** Exact decimal sum surfaced as double: deterministic across partition
-    * orders (decimal addition is associative), comparable across engines. */
-  def sumExact(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
 
   /** A2/A4/A5/A11 — status-matrix count: GROUP BY groupCols → count
     * (`qcfractal/components/base_dataset_socket.py:207-219`,

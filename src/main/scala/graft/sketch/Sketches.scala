@@ -256,12 +256,15 @@ object Sketches {
     * step; sizing from the data is what a fixed-m filter gets wrong at
     * 100× scale-up (the same lesson as `adaptiveSrpParams`). Production
     * sizes n from the HLL estimate above instead of an exact count.
-    * HARD CEILING: [[bloomBucket]] caps the width at 15 hex chars (the
-    * Md5Prefix positive-long limit), reached only at ~7·10^16 distinct
-    * keys — past it the filter degrades to a denser fixed 2^60 bucket
-    * space (FPR rises, never a false negative) instead of failing
-    * per-row mid-scan (r18 ADVICE). */
-  def bloomHexChars(n: Column): Column = length(hex(lit(16L) * n - 1))
+    * HARD CEILING: the width is capped at 15 hex chars (the Md5Prefix
+    * positive-long limit), reached at 16^14 ≈ 7·10^16 distinct keys —
+    * past it the filter degrades to a denser fixed 2^60 bucket space
+    * (FPR rises, never a false negative) instead of failing per-row
+    * mid-scan. The cap applies to `n` before the multiply, so `16·n`
+    * cannot overflow, and the reported `c` / `m_bits` are the bucket
+    * space [[bloomBucket]] really uses. */
+  def bloomHexChars(n: Column): Column =
+    least(length(hex(lit(16L) * least(n.cast("long"), lit(1L << 56)) - 1)), lit(15))
 
   /** Row-i bit position of a value — same seeded-md5 family as the CMS,
     * with the hex width `c` a COLUMN (broadcast from the sizing pass) so

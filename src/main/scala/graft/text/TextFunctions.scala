@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for large-scale training-data pipelines:
-  * tokenization, token counting, quality scoring, language-ID heuristics,
+  * tokenization, token counting, quality heuristics, language-ID heuristics,
   * and document fingerprinting.
   *
   * Everything here is built from codegen'd Catalyst built-ins (no UDFs):
@@ -18,12 +18,6 @@ object TextFunctions {
 
   /** Whitespace token count. */
   def wsTokenCount(text: Column): Column = size(wsTokens(text)).cast("long")
-
-  /** BPE-ish token count: letter runs, single digits, single punctuation —
-    * a cheap, deterministic stand-in for a real BPE vocab that tracks
-    * subword counts well enough for budgeting/filtering. */
-  def bpeTokenCount(text: Column): Column =
-    regexp_count(text, lit("[a-z]+|[0-9]|[^a-z0-9\\s]")).cast("long")
 
   /** Occurrences of literal substring `s` (length/replace arithmetic —
     * exact, engine-portable, no regex). */
@@ -42,20 +36,6 @@ object TextFunctions {
     regexp_count(text, lit("[^a-z0-9\\s]")).cast("long")
   def punctRatio(text: Column): Column =
     punctCount(text).cast("double") / length(text)
-
-  /** Mean token length (chars excluding whitespace / token count). */
-  def avgTokenLen(text: Column): Column =
-    length(regexp_replace(text, "\\s+", "")).cast("double") / wsTokenCount(text)
-
-  /** Composite quality score in [0,1]-ish: rewards mid-length docs with
-    * low punctuation and a natural stopword rate (heuristics in the style
-    * of C4/Gopher quality filters). */
-  def qualityScore(text: Column, stopwords: Seq[String]): Column = {
-    val lenScore = least(length(text).cast("double") / 500.0, lit(1.0))
-    val stopScore = least(stopwordRatio(text, stopwords) * 5.0, lit(1.0))
-    val punctPenalty = least(punctRatio(text) * 10.0, lit(1.0))
-    (lenScore * 0.4 + stopScore * 0.4 + (lit(1.0) - punctPenalty) * 0.2)
-  }
 
   /** Language-ID votes: count marker-word hits per language over the
     * space-padded text. Returns the marker hit count for one language. */

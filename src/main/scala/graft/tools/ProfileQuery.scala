@@ -1,14 +1,17 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.{SparkEntry, Tables}
 
 /** Job-level profile of one driver-contract query: how many Spark jobs
   * it schedules and where the wall-clock goes. Orchestration-heavy
   * operators (incremental dedup, iterative components) are bounded by
-  * scheduler round-trips at toy scale — this makes that visible.
+  * scheduler round-trips at toy scale — this makes that visible, along
+  * with the code the measured run had to compile (count and Janino ms).
   *
   *   sbt "runMain graft.tools.ProfileQuery dd_incremental /root/testdata/sf0.1"
   */
@@ -48,13 +51,21 @@ object ProfileQuery {
       // warm-up so codegen/parquet-footer costs don't pollute the profile
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       rows.clear()
+      // Janino compilations of the measured run: a class the JVM-wide
+      // generated-class cache still holds from the warm-up costs nothing,
+      // so a non-zero count here is code compiled again on a repeat run
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val totalMs = (System.nanoTime() - t0) / 1000000L
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
       Thread.sleep(500) // let listener events drain
       val all = rows.asScala.toSeq.sortBy(_._1)
       val jobSum = all.map(_._2).sum
-      println(s"== $name: ${all.size} jobs, ${totalMs} ms wall, ${jobSum} ms in jobs ==")
+      println(s"== $name: ${all.size} jobs, ${totalMs} ms wall, ${jobSum} ms in jobs, " +
+        s"$compiles compilations, $compileMs ms compiling ==")
       // driver-side idle: gap between a job's end and the next job's start
       var prevEnd = 0L
       all.foreach { case (id, ms, desc, st, en) =>

@@ -52,6 +52,38 @@ class CodegenSpec extends SparkSuite {
     assert(proj != null)
   }
 
+  test("hill_formula: interpreted and generated code agree, null flags included") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.HillFormulaExpr
+    def arr(syms: String*) =
+      new GenericArrayData(syms.map(s => if (s == null) null else UTF8String.fromString(s)).toArray[Any])
+    val cases = Seq(
+      InternalRow(arr("C", null, "H")) -> None,            // null element
+      InternalRow(null) -> None,                           // null array
+      InternalRow(arr()) -> Some(""),                      // empty array
+      InternalRow(arr("Ω", "H", "C", "Å", "H", "Ω")) -> Some("CH2ÅΩ2"), // non-ASCII
+      InternalRow(arr("O", "H", "H")) -> Some("H2O"))
+    val hill = HillFormulaExpr(BoundReference(0, ArrayType(StringType), nullable = true))
+    assert(hill.nullable)
+    val proj = GenerateUnsafeProjection.generate(Seq(hill))
+    cases.foreach { case (row, want) =>
+      val interpreted = Option(hill.eval(row)).map(_.toString)
+      val out = proj(row)
+      val generated = if (out.isNullAt(0)) None else Some(out.getUTF8String(0).toString)
+      assert(interpreted == want, s"interpreted $interpreted, expected $want")
+      assert(generated == want, s"generated $generated, expected $want")
+    }
+    // no nulls possible in or out: the generated code sets no null flag
+    val strict = HillFormulaExpr(
+      BoundReference(0, ArrayType(StringType, containsNull = false), nullable = false))
+    assert(!strict.nullable)
+    val row = InternalRow(arr("H", "C", "H"))
+    assert(GenerateUnsafeProjection.generate(Seq(strict))(row).getUTF8String(0).toString ==
+      strict.eval(row).toString)
+  }
+
   test("native hilbert_key is identical to the aggregate-fold form (seeded sweep)") {
     import org.apache.spark.sql.functions._
     import graft.operators.Layout

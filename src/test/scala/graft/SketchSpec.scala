@@ -212,6 +212,18 @@ class SketchSpec extends SparkSuite {
     assert(df.as[Int].collect().toSeq == Seq(1, 2, 4, 5, 5))
   }
 
+  test("bloom sizing: width capped at 15 hex chars, with no 16·n overflow") {
+    // uncapped: 16^13 → 14, 16^14 → 15, 16^14+1 → 16, 2^60 → 16 (16·n
+    // wraps to 0), 2^60+1 → 1 (16·n wraps to 16)
+    val ns = Seq(1L << 52, 1L << 56, (1L << 56) + 1, 1L << 60, (1L << 60) + 1, Long.MaxValue)
+    val rows = ns.toDF("n")
+      .withColumn("c", Sketches.bloomHexChars(col("n")).cast("int"))
+      .withColumn("m_bits", expr("shiftleft(CAST(1 AS BIGINT), 4 * c)"))
+      .select("c", "m_bits").as[(Int, Long)].collect().toSeq
+    assert(rows.map(_._1) == Seq(14, 15, 15, 15, 15, 15))
+    assert(rows.map(_._2) == Seq(1L << 56, 1L << 60, 1L << 60, 1L << 60, 1L << 60, 1L << 60))
+  }
+
   test("bloom: never a false negative; false-positive rate bounded at worst fill") {
     // corpus size AT a width boundary (n = 16^(c−1)) = the WORST fill
     // for its width (exactly 16 bits/key): FP ≈ (1−e^(−1/4))^4 ≈ 0.24%
